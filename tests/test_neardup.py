@@ -875,3 +875,21 @@ def test_pairs_from_sigs_mapside_dedup_parity(documents):
     assert legacy.exceptAll(fast).count() == 0
     # and no duplicate pairs slipped through the map-side filter
     assert fast.count() == fast.distinct().count()
+
+
+def test_lsh_uncapped_no_self_pairs_on_duplicate_ids(spark):
+    """Copies of one id that carry different text stay separate bucket
+    members on the uncapped path; they must not pair with each other."""
+    words = [f"w{i}" for i in range(40)]
+    half = words[:20] + [f"x{i}" for i in range(20, 40)]
+    base = " ".join(words)
+    # the two copies of id 7 differ in most minhashes but share a band
+    df = spark.createDataFrame(
+        [(7, base), (7, " ".join(half)), (9, base + " other")],
+        ["doc_id", "text"],
+    )
+    got = lsh_candidate_pairs(
+        df, num_hashes=8, bands=8, max_bucket_size=None
+    ).collect()
+    assert (7, 9) in {(r["id_a"], r["id_b"]) for r in got}
+    assert all(r["id_a"] < r["id_b"] for r in got)

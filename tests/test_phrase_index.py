@@ -392,37 +392,3 @@ def test_bucketed_table_variant(spark, corpus, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS postings_bucketed")
 
-
-def test_corpus_grams_engine_parity(spark, documents):
-    """The opt-in arrow enumeration (kept as a documented measured
-    negative — see _enum_grams_arrow) must emit exactly the expression
-    plan's candidate stream across slop/with_doc/vocab shapes."""
-    import pyspark.sql.functions as F
-
-    from wimbd_spark.functions.text import tokenize
-    from wimbd_spark.index import (
-        build_phrase_index,
-        corpus_grams_from_postings,
-        load_phrase_index,
-    )
-    import tempfile, os
-
-    with tempfile.TemporaryDirectory() as td:
-        path = os.path.join(td, "idx")
-        build_phrase_index(documents, path)
-        idx = load_phrase_index(spark, path)
-        vocab = documents.select(
-            F.explode(tokenize(F.col("text"))).alias("token")
-        ).limit(2000)
-        for slop in (0, 1):
-            for wd in (False, True):
-                a = corpus_grams_from_postings(
-                    idx, [3, 4], with_doc=wd, vocab=vocab, slop=slop,
-                    engine="arrow",
-                )
-                x = corpus_grams_from_postings(
-                    idx, [3, 4], with_doc=wd, vocab=vocab, slop=slop,
-                    engine="expr",
-                )
-                assert a.exceptAll(x).count() == 0
-                assert x.exceptAll(a).count() == 0

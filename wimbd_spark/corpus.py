@@ -214,13 +214,6 @@ def split_train_valid_test(
     )
 
 
-def write_split(df: DataFrame, path: str, text_col: str = "text") -> None:
-    """Materialize the S12 splitter as split-partitioned parquet."""
-    split_train_valid_test(df, text_col).write.mode("overwrite").partitionBy(
-        "split"
-    ).parquet(path)
-
-
 def _hf_split_files(root: str, split: str) -> tuple[str, list[str]]:
     """Locate a split's data files inside a local HF dataset directory.
 

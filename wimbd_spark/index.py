@@ -316,100 +316,6 @@ def slop_combination_count(lengths: list[int], slop: int) -> int:
     return sum(math.comb(L + slop - 1, L - 1) for L in set(lengths))
 
 
-def _enum_grams_arrow(
-    tokpos: DataFrame, Ls: list[int], slop: int, max_l: int
-) -> DataFrame:
-    """Candidate (doc_id, _L, _toks) stream enumerated per document in
-    numpy instead of the window/collect_list expression plan.
-
-    The expression form pays, per (pruned) posting row, a sorted
-    window materializing an (L+slop)-struct array plus one interpreted
-    CASE per anchored combination; here one applyInPandas group per
-    document sorts its positions once and gathers every combination's
-    token matrix vectorized. Emits exactly the rows the window plan's
-    explode emits (same anchors, same span checks, duplicates
-    included) — downstream match_keys semi-join / dedup are unchanged,
-    so parity is pinned at this stream's level in tests.
-
-    MEASURED NEGATIVE at sf1 (kept as an opt-in, NOT the default):
-    the candidate stream — millions of (doc, L, token-array) rows —
-    must cross the Python→JVM Arrow boundary before the match_keys
-    semi-join can prune it, and that serialization cost exceeds the
-    whole expression plan (contamination_slop1_indexed 4.2 s → 20.4 s,
-    phrase_df_counts 2.8 s → 13.3 s). The lead()-column rewrite of
-    the expression plan attacks the same per-row window cost without
-    shipping candidates out of the JVM.
-    """
-    import numpy as np
-
-    id_t = tokpos.schema["doc_id"].dataType.simpleString()
-    out_schema = f"doc_id {id_t}, _L int, _toks array<string>"
-    combos = [
-        (L, np.asarray(c, dtype=np.int64) - 1)
-        for L in Ls
-        for c in (
-            [tuple(range(1, L + 1))] if slop == 0 else _slop_combos(L, slop)
-        )
-    ]
-    slop_i = int(slop)
-
-    def enum(pdf):
-        import pandas as pd
-
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="object"),
-                    "_L": pd.Series(dtype="int32"),
-                    "_toks": pd.Series(dtype="object"),
-                }
-            )
-        P = pdf["_pos"].to_numpy()
-        order = np.argsort(P)
-        P = P[order]
-        T = pdf["token"].to_numpy()[order]
-        did = pdf["doc_id"].iloc[0]
-        out_l: list = []
-        out_t: list = []
-        for L, c in combos:
-            last = int(c[-1])
-            m = n - last
-            if m <= 0:
-                continue
-            anchors = np.arange(m)
-            span = P[anchors + last] - P[anchors]
-            # slop=0 demands exact contiguity (== L-1); slop>0 a
-            # window bound (<= L+slop-1) — the window plan's CASEs
-            valid = (
-                span == (L - 1) if slop_i == 0 else span <= (L + slop_i - 1)
-            )
-            k = int(valid.sum())
-            if k == 0:
-                continue
-            idx = anchors[valid][:, None] + c[None, :]
-            out_l.append(np.full(k, L, dtype=np.int32))
-            out_t.extend(T[idx].tolist())
-        if not out_l:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="object"),
-                    "_L": pd.Series(dtype="int32"),
-                    "_toks": pd.Series(dtype="object"),
-                }
-            )
-        all_l = np.concatenate(out_l)
-        return pd.DataFrame(
-            {
-                "doc_id": [did] * len(all_l),
-                "_L": all_l,
-                "_toks": out_t,
-            }
-        )
-
-    return tokpos.groupBy("doc_id").applyInPandas(enum, out_schema)
-
-
 def corpus_grams_from_postings(
     index: DataFrame,
     lengths: list[int],
@@ -417,7 +323,6 @@ def corpus_grams_from_postings(
     vocab: DataFrame | None = None,
     slop: int = 0,
     match_keys: DataFrame | None = None,
-    engine: str = "expr",
 ) -> DataFrame:
     """Distinct token L-gram keys of the INDEXED corpus for every L in
     ``lengths``, reconstructed from postings alone (positions →
@@ -464,8 +369,6 @@ def corpus_grams_from_postings(
         raise ValueError("lengths must contain at least one L >= 1")
     if slop < 0:
         raise ValueError("slop must be >= 0")
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"unknown engine {engine!r}")
     if slop and (n := slop_combination_count(Ls, slop)) > MAX_SLOP_COMBINATIONS:
         raise ValueError(
             f"slop={slop} over lengths {Ls} enumerates {n:,} per-position"
@@ -481,25 +384,17 @@ def corpus_grams_from_postings(
         tokpos = tokpos.join(
             vocab.select("token").distinct(), "token", "left_semi"
         )
-    if engine == "arrow":
-        out = _enum_grams_arrow(tokpos, Ls, slop, max_l)
-        if match_keys is not None:
-            out = out.join(
-                match_keys.select("_L", "_toks"),
-                ["_L", "_toks"],
-                "left_semi",
-            )
-        if with_doc:
-            return out.dropDuplicates(["doc_id", "_L", "_toks"])
-        return out.select("_L", "_toks").distinct()
     # NOTE (r16, measured negative): rewriting this lookahead as
     # lead(k) columns over one window spec — primitive columns, no
     # per-row array — was uniformly SLOWER (each distinct lead offset
     # gets its own OffsetWindowFunctionFrame, so 2·(max_l+slop−1)
     # frame processors replace one collect_list frame; at the
-    # mixed-length tokens_slop1 shape, 3 s → 19 s). The collect_list
-    # window below stands as the measured-best plan, alongside the
-    # engine="arrow" negative documented on _enum_grams_arrow.
+    # mixed-length tokens_slop1 shape, 3 s → 19 s). So was a per-doc
+    # numpy enumerator (applyInPandas): its multi-million-row candidate
+    # stream must cross the Python→JVM Arrow boundary before the
+    # match_keys semi-join can prune it (contamination_slop1_indexed
+    # 4.2 s → 20.4 s, phrase_df_counts 2.8 s → 13.3 s at sf1). The
+    # collect_list window below stands as the measured-best plan.
     w = (
         Window.partitionBy("doc_id")
         .orderBy("_pos")

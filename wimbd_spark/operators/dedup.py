@@ -531,17 +531,6 @@ def _anchored_hits(corpus, phrases_tok, text_col):
     )
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's static size estimate for a plan (decompressed bytes),
-    or None if the internal accessor moves in a future Spark."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return None
-
-
 def _rate_row(spark, n_hit: int, n_tot: int) -> DataFrame:
     """(contaminated, total, rate) single-row result. An empty eval
     set has an UNDEFINED rate (0/0) — NULL, not 0.0: emitting 0.0
@@ -582,13 +571,15 @@ def contamination_rate(
     else prefilter.
     """
     from wimbd_spark.functions.text import tokenize
+    from wimbd_spark.session import plan_size_bytes
 
     phrases = eval_df.select(F.col(phrase_col).alias("_p")).distinct()
     n_tot = phrases.count()
     if prefilter is None:
-        sz = _plan_size_bytes(corpus)
+        # unknown size (0) takes the plan that scales
+        sz = plan_size_bytes(corpus)
         prefilter = n_tot >= prefilter_threshold and (
-            sz is None or sz * n_tot > bnlj_budget
+            sz == 0 or sz * n_tot > bnlj_budget
         )
     if not prefilter:
         hits = _contains_hits(corpus, phrases, text_col)

@@ -100,12 +100,61 @@ def minhash_signatures(
     ).filter(F.col("mh0").isNotNull())
 
 
-#: Per-process memo of gram string → hash32 for the Arrow shingle
-#: engine — same rationale as _SIMHASH_HASH_CACHE (md5 is pure, worker
-#: processes are reused, vocabulary is Zipfian). No salt dimension:
-#: shingle hashes are unsalted hash32, so the gram string alone keys.
-_SHINGLE_HASH_CACHE: dict = {}
-_SHINGLE_HASH_CACHE_MAX = 1 << 20
+#: Per-process memo of (salt prefixes, gram string) → packed hash32
+#: halves for the Arrow text engines (shingle sets, simhash votes):
+#: md5 is a pure function of the gram, worker processes are reused
+#: across tasks, and web-corpus vocabulary is Zipfian — the memo turns
+#: per-occurrence md5 cost into per-vocabulary-gram cost. Bounded;
+#: cleared wholesale at the cap. The key CARRIES the salt prefixes: the
+#: packed value depends on which salts filled it, so a gram-only key
+#: served an nbits<=32 simhash entry (high half zero) to an nbits>32
+#: caller whenever the dict was shared across UDF instances (ADVICE r15).
+_ARROW_GRAM_MEMO: dict = {}
+_ARROW_GRAM_MEMO_MAX = 1 << 21
+
+
+def _arrow_gram_recipe(prefixes: tuple[bytes, ...], n: int):
+    """``(grams, packed)`` closures for the Arrow text engines' Python
+    side, the recipe their parity with the expression engines rests on.
+
+    - ``grams(arr)``: distinct n-gram strings of a raw
+      ``split(trim(text), '\\s+')`` token list, empty tokens dropped —
+      the strings functions.text.ngram_strings builds (same slice
+      bounds, same single-space join); empty when fewer than n tokens.
+    - ``packed(g)``: ``hash32(g, salt_k)`` in bits 32k..32k+31 of one
+      int, where ``prefixes[k]`` is ``b""`` for unsalted hash32 or
+      ``b"<salt>:"``; memoized in _ARROW_GRAM_MEMO.
+
+    Build them on the driver: nested closures ship to the Python
+    workers by value, and ``packed`` stays a local closure in the
+    per-token hot loop."""
+    import hashlib
+
+    cache = _ARROW_GRAM_MEMO
+    cap = _ARROW_GRAM_MEMO_MAX
+
+    def grams(arr) -> set:
+        toks = [t for t in arr if t != ""]
+        if n == 1:
+            return set(toks)
+        return {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+
+    def packed(g: str) -> int:
+        key = (prefixes, g)
+        h = cache.get(key)
+        if h is None:
+            if len(cache) >= cap:
+                cache.clear()
+            b = g.encode()
+            h = 0
+            for k, pre in enumerate(prefixes):
+                h |= int.from_bytes(
+                    hashlib.md5(pre + b).digest()[:4], "big"
+                ) << (32 * k)
+            cache[key] = h
+        return h
+
+    return grams, packed
 
 
 def _shingle_table_arrow(
@@ -121,8 +170,8 @@ def _shingle_table_arrow(
     occurrence) removes both: each document's sorted distinct hash set
     is built in-process (np.unique) and the stage stays map-only.
     Values are identical by construction: same whitespace tokenize,
-    same " "-joined gram strings (the simhash Arrow engine's
-    parity-pinned recipe), same md5-prefix hash32.
+    same " "-joined gram strings, same md5-prefix hash32
+    (_arrow_gram_recipe, shared with the simhash Arrow engine).
     """
     from pyspark.sql.types import (
         ArrayType,
@@ -141,26 +190,11 @@ def _shingle_table_arrow(
             StructField("hs", ArrayType(LongType(), False), False),
         ]
     )
-    n = int(shingle_n)
+    grams, h32 = _arrow_gram_recipe((b"",), int(shingle_n))
 
     def gen(batches):
-        import hashlib
-
         import numpy as np
         import pyarrow as pa
-
-        cache = _SHINGLE_HASH_CACHE
-
-        def h32(g: str) -> int:
-            v = cache.get(g)
-            if v is None:
-                if len(cache) >= _SHINGLE_HASH_CACHE_MAX:
-                    cache.clear()
-                v = int.from_bytes(
-                    hashlib.md5(g.encode()).digest()[:4], "big"
-                )
-                cache[g] = v
-            return v
 
         for batch in batches:
             ids = batch.column(0)
@@ -171,16 +205,9 @@ def _shingle_table_arrow(
             for i, arr in enumerate(tl):
                 if arr is None:
                     continue
-                toks = [t for t in arr if t != ""]
-                if len(toks) < n:
+                uniq = grams(arr)
+                if not uniq:
                     continue
-                if n == 1:
-                    uniq = set(toks)
-                else:
-                    uniq = {
-                        " ".join(toks[j : j + n])
-                        for j in range(len(toks) - n + 1)
-                    }
                 hs = np.unique(
                     np.fromiter(
                         (h32(g) for g in uniq), dtype=np.int64,
@@ -365,6 +392,10 @@ def _pairs_from_sigs(
     # pair's first agreeing band can be a bucket the cap dropped while
     # a later band kept the pair — survival of another band's bucket
     # is not knowable map-side, so the capped branch keeps distinct().
+    # The vector makes each uncapped bucket's collect_set buffer about
+    # bands× larger than the capped branch's id-only buffer. Duplicate
+    # ids with different text stay distinct structs in that set, so
+    # the final select drops the self-pairs they would form.
     dedup_mapside = max_bucket_size is None
     buckets = _banded_buckets(
         sigs, id_col, num_hashes, bands, with_vector=dedup_mapside
@@ -445,9 +476,9 @@ def _pairs_from_sigs(
             if first_band is None
             else first_band.when(agree, F.lit(j))
         )
-    return paired.filter(F.col("band") == first_band).select(
-        "id_a", F.col("_b.id").alias("id_b")
-    )
+    return paired.filter(
+        (F.col("band") == first_band) & (F.col("id_a") < F.col("_b.id"))
+    ).select("id_a", F.col("_b.id").alias("id_b"))
 
 
 def lsh_candidate_pairs(
@@ -467,7 +498,11 @@ def lsh_candidate_pairs(
     risk; `bands`/`rows` tune the candidate volume, and
     ``max_bucket_size`` (finite by default) hard-caps degenerate
     buckets before they are ever gathered (see _pairs_from_sigs;
-    audit with lsh_bucket_sizes; None disables).
+    audit with lsh_bucket_sizes; None disables). Uncapped, every
+    bucket member carries its full band-hash vector (so each pair is
+    emitted once without a distinct() exchange), which makes the
+    per-bucket aggregation buffer about ``bands``× larger — a
+    degenerate bucket costs that much more memory.
     """
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
     return _pairs_from_sigs(sigs, id_col, num_hashes, bands, max_bucket_size)
@@ -1210,19 +1245,6 @@ def simhash16(text: Column | str, shingle_n: int = 1) -> Column:
     )
 
 
-#: Per-process memo of (token, nh) → packed salted hash32 halves for
-#: the Arrow simhash engine: md5 is a pure function of the token,
-#: worker processes are reused across tasks, and web-corpus vocabulary
-#: is Zipfian — the cache turns ~per-token-instance md5 cost into
-#: ~per-vocabulary-word cost. Bounded; cleared wholesale at the cap.
-#: The key CARRIES nh (= ceil(nbits/32)): the packed value depends on
-#: how many 32-bit halves were filled, so a token-only key served an
-#: nbits<=32 entry (high half zero) to an nbits>32 caller whenever the
-#: dict is genuinely shared across UDF instances (ADVICE r15).
-_SIMHASH_HASH_CACHE: dict = {}
-_SIMHASH_HASH_CACHE_MAX = 1 << 20
-
-
 def _simhash_bits_arrow(
     raw_split: Column, nbits: int, shingle_n: int
 ) -> Column:
@@ -1236,13 +1258,12 @@ def _simhash_bits_arrow(
     per 280k tokens measured r15, and the garbage presses on the GC
     for the rest of the job); here each Arrow batch is one numpy
     bit-matrix + one segmented reduce. md5 values are memoized per
-    process (see _SIMHASH_HASH_CACHE), so repeated vocabulary costs
+    process (see _ARROW_GRAM_MEMO), so repeated vocabulary costs
     one hash ever.
 
     ``raw_split`` must be the LAMBDA-FREE ``split(trim(text), '\\s+')``
     — empty-token filtering and shingle assembly happen in Python
-    (identical strings by construction: same slice bounds, same
-    single-space join as functions.text.ngram_strings). A pandas_udf
+    (_arrow_gram_recipe: identical strings by construction). A pandas_udf
     whose argument embeds a higher-order-function lambda is NOT
     reliably extracted into ArrowEvalPython (whether extraction
     happens depends on JVM expression-id alignment; when it does not,
@@ -1250,31 +1271,14 @@ def _simhash_bits_arrow(
     reproduced deterministically r15), so no HOF may appear in the
     argument."""
 
-    nh = (nbits + 31) // 32
+    grams, packed = _arrow_gram_recipe(
+        tuple(f"sh64{k}:".encode() for k in range((nbits + 31) // 32)),
+        shingle_n,
+    )
 
     @F.pandas_udf("long")
     def _sig(tok_s: pd.Series) -> pd.Series:
-        import hashlib
-
         import numpy as np
-
-        cache = _SIMHASH_HASH_CACHE
-        salts = [f"sh64{k}:".encode() for k in range(nh)]
-
-        def packed(tok: str) -> int:
-            key = (tok, nh)
-            h = cache.get(key)
-            if h is None:
-                if len(cache) >= _SIMHASH_HASH_CACHE_MAX:
-                    cache.clear()
-                b = tok.encode()
-                h = 0
-                for k in range(nh):
-                    h |= int.from_bytes(
-                        hashlib.md5(salts[k] + b).digest()[:4], "big"
-                    ) << (32 * k)
-                cache[key] = h
-            return h
 
         # flatten the batch: one hash row per (doc, distinct shingle),
         # then one bit matrix + segmented reduce for the whole batch
@@ -1289,16 +1293,7 @@ def _simhash_bits_arrow(
                 # token array to the EMPTY gram array → signature 0
                 per_doc.append(None if shingle_n == 1 else 0)
                 continue
-            toks = [t for t in arr if t != ""]
-            if shingle_n == 1:
-                uniq = set(toks)
-            elif len(toks) >= shingle_n:
-                uniq = {
-                    " ".join(toks[i : i + shingle_n])
-                    for i in range(len(toks) - shingle_n + 1)
-                }
-            else:
-                uniq = set()
+            uniq = grams(arr)
             per_doc.append(len(uniq))
             flat.extend(packed(t) for t in uniq)
         if not flat:

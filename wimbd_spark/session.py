@@ -76,9 +76,7 @@ def get_spark(
         # compilation again. Sized to hold a working set of ~hundreds
         # of query shapes; cost is class metadata (MBs). Same effect
         # on any cluster (driver and executors each hold this cache).
-        "spark.sql.codegen.cache.maxEntries": os.environ.get(
-            "WIMBD_CODEGEN_CACHE_ENTRIES", "4096"
-        ),
+        "spark.sql.codegen.cache.maxEntries": "4096",
         # pandas-written parquet uses TIMESTAMP(NANOS); read as long and
         # rebuild timestamps in load_tables (Spark has no ns timestamps).
         "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -232,24 +230,31 @@ def scoped_persist(df: DataFrame, level=None) -> DataFrame:
 #: compresses ~5-10×, so 2 MiB on-disk ≈ 10-20 MB of raw text ≈ the
 #: measured local crossover (sf0.1 regressed 0.4-0.7 s/query on
 #: arrow-always; sf1 won 2.5-3.5×). Results are engine-independent
-#: (parity-pinned), so the gate is pure cost routing; tune per
-#: deployment via WIMBD_ARROW_TEXT_MIN_BYTES.
-ARROW_TEXT_MIN_BYTES = int(
-    os.environ.get("WIMBD_ARROW_TEXT_MIN_BYTES", str(2 * 1024 * 1024))
-)
+#: (parity-pinned), so the gate is pure cost routing.
+ARROW_TEXT_MIN_BYTES = 2 * 1024 * 1024
 
 
 def plan_size_bytes(df: DataFrame) -> int:
     """Optimizer size estimate of a DataFrame — driver-side plan
     statistics, NO Spark job (file-size-derived for parquet-backed
-    plans). The job-free signal for engine auto-gates; 0 on failure
-    (callers treat 0 as small)."""
+    plans). The one job-free signal for every auto-gate that routes on
+    input size; 0 when the size is unknown (the engine, persist and
+    LSH block gates then take their small-input route;
+    contamination_rate takes its scalable one).
+
+    Unknown covers a failed lookup and any estimate at or past
+    ``spark.sql.defaultSizeInBytes``, Catalyst's placeholder for plans
+    without statistics: in-memory ``createDataFrame`` frames report
+    Long.MaxValue, and a join of two such frames multiplies the
+    placeholders far past it."""
     try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        jdf = df._jdf
+        size = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        conf = jdf.sparkSession().sessionState().conf()
+        unknown = int(conf.defaultSizeInBytes())
     except Exception:
         return 0
+    return 0 if size >= unknown else size
 
 
 def resolve_text_engine(df: DataFrame, engine: str) -> str:
