@@ -1,4 +1,4 @@
-.PHONY: test test-full check bench smoke lint examples
+.PHONY: test test-full check check-smoke bench smoke lint examples
 
 # default tier: slow-tier tests (tests/conftest.py SLOW_TIER_NODE_IDS)
 # are skipped so the run fits a CI/verify window (~14 min)
@@ -18,6 +18,12 @@ check-smoke:
 
 bench:
 	python bench.py
+
+# the source lints; WIMBD_FULL_TESTS=1 because the registry window lint
+# is in the slow tier
+lint:
+	WIMBD_FULL_TESTS=1 python -m pytest -q -p no:cacheprovider \
+		tests/test_env_lint.py tests/test_window_lint.py
 
 smoke:
 	python -c "import __spark_entry__ as e; from wimbd_spark import get_spark; \

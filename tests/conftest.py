@@ -73,7 +73,6 @@ SLOW_TIER_NODE_IDS = frozenset({
     "test_similarity.py::test_knn_join_matches_interactive",
     "test_similarity.py::test_knn_join_pq_matches_interactive_rerank",
     "test_similarity.py::test_lsh_dim_inference",
-    "test_similarity.py::test_maintain_ivf_index_dispatch",
     "test_similarity.py::test_pq_rerank_join_matches_collect",
     "test_similarity.py::test_pq_topk_properties",
     "test_similarity.py::test_semantic_duplicates_ivf_rule",

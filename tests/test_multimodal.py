@@ -8,7 +8,6 @@ from wimbd_spark.operators.multimodal import (
     attach_fake_payload,
     bytes_meta,
     extract_features,
-    frame_sample,
 )
 
 
@@ -46,19 +45,6 @@ def test_extract_features_real_path_stubbed(media):
     assert "NotImplementedError" in str(exc_info.value) or isinstance(
         exc_info.value, NotImplementedError
     )
-
-
-def test_frame_sample(media):
-    rows = frame_sample(media, every_ms=4).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # "hello world" = 11 bytes, step 4 → frames at 0,4,8 → 3 frames
-    assert len(by_doc[1]) == 3
-    assert bytes(by_doc[1][0]["frame"]) == b"hell"
-    # reassembling frames gives back the payload
-    joined = b"".join(bytes(r["frame"]) for r in sorted(by_doc[1], key=lambda r: r["frame_idx"]))
-    assert joined == b"hello world"
 
 
 # ---- real header/pixel/sample decode (stdlib-only) ----

@@ -1012,81 +1012,16 @@ def test_needs_absorb_trigger(spark, tmp_path):
     assert needs_absorb(spark, fresh) is False
 
 
-def test_maintain_ivf_index_dispatch(spark, tmp_path):
-    import os
-
-    from wimbd_spark.operators.similarity import (
-        build_ivf_index,
-        maintain_ivf_index,
-    )
-    from wimbd_spark.streaming.vectors import (
-        read_vector_stream,
-        streaming_ivf_ingest,
-    )
-
-    base = spark.createDataFrame(
-        [(i, [1.0, 0.1 * i, 0.0, 0.0]) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    # healthy small index: nothing to do, nothing written
-    p1 = str(tmp_path / "m_ok")
-    build_ivf_index(base, p1, n_centroids=2)
-    assert maintain_ivf_index(spark, p1, str(tmp_path / "m_ok2")) == "ok"
-    assert not os.path.exists(str(tmp_path / "m_ok2"))
-
-    # delta over the 10% bar, no skew: absorb
-    newv = spark.createDataFrame(
-        [(100 + i, [0.5, 0.5, 0.1 * i, 0.0]) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    feed = str(tmp_path / "m_feed")
-    newv.coalesce(1).write.parquet(feed)
-    q = streaming_ivf_ingest(
-        read_vector_stream(spark, feed), p1,
-        checkpoint=str(tmp_path / "m_ckpt"),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    g2 = str(tmp_path / "m_gen2")
-    assert maintain_ivf_index(spark, p1, g2) == "absorbed"
-    assert not os.path.exists(f"{g2}/delta")
-
-    # skew over the bar (blob append, min_rows via monkey arg): the
-    # skew path needs >= MIN_RECLUSTER_ROWS vectors, so build big
-    big = spark.createDataFrame(
-        [(i, [1.0, 0.01 * (i % 64), 0.0, 0.0]) for i in range(64)]
-        + [(2000 + i, [10.0, 1.0 + i * 0.0005, 0.0, 0.0])
-           for i in range(1100)],
-        "vec_id long, embedding array<double>",
-    )
-    p3 = str(tmp_path / "m_skew")
-    # sample centroids land mostly in the blob? build from the SPREAD
-    # subset then append the blob so it concentrates in one list
-    from wimbd_spark.operators.similarity import append_to_ivf_index
-
-    build_ivf_index(big.filter("vec_id < 2000"), p3, n_centroids=8)
-    append_to_ivf_index(big.filter("vec_id >= 2000"), p3)
-    g3 = str(tmp_path / "m_gen3")
-    assert maintain_ivf_index(
-        spark, p3, g3, n_centroids=8
-    ) == "reclustered"
-    assert os.path.exists(f"{g3}/lists")
-
-
 def test_empty_delta_dir_tolerated(spark, tmp_path):
     """A delta dir with no readable data (failed first epoch write,
     manual cleanup) must behave exactly like no delta: queries, size
-    audit, absorb trigger, and the maintenance dispatch all keep
-    working."""
+    audit and the absorb trigger all keep working."""
     import os
 
     from wimbd_spark.operators.similarity import (
         build_ivf_index,
         cosine_topk_ivf_indexed,
         ivf_list_sizes,
-        maintain_ivf_index,
         needs_absorb,
     )
 
@@ -1105,9 +1040,6 @@ def test_empty_delta_dir_tolerated(spark, tmp_path):
     got = cosine_topk_ivf_indexed(spark, path, queries, k=2, n_probe=2)
     assert got.count() == 4
     assert needs_absorb(spark, path) is False
-    assert maintain_ivf_index(
-        spark, path, str(tmp_path / "nope3")
-    ) == "ok"
 
 
 def _knn_fixture(spark, tmp_path, name="knnj", pq=False):

@@ -722,105 +722,6 @@ def test_streaming_url_filter_matches_batch(spark, tmp_path):
     assert got == batch
 
 
-def test_streaming_semantic_filter_matches_batch(spark, tmp_path):
-    """The stateless semantic gate drops exactly the stream rows whose
-    embedding has an in-cluster reference neighbor at cosine >= tau —
-    batch-twin = the same exists-test computed with plain joins."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from wimbd_spark.operators.similarity import build_ivf_index
-    from wimbd_spark.streaming.dedup import (
-        semantic_reference_table,
-        streaming_semantic_filter,
-    )
-
-    ref_rows = [
-        (100, [1.0, 0.0, 0.0, 0.0]),
-        (101, [0.0, 1.0, 0.0, 0.0]),
-        (102, [0.0, 0.0, 1.0, 0.0]),
-    ]
-    reference = spark.createDataFrame(
-        ref_rows, "vec_id long, embedding array<double>"
-    )
-    idx = str(tmp_path / "semidx")
-    build_ivf_index(reference, idx, n_centroids=3)
-
-    stream_rows = [
-        (1, [0.99, 0.14, 0.0, 0.0]),   # ~ref 100 → dropped
-        (2, [0.0, 0.97, 0.24, 0.0]),   # ~ref 101 → dropped
-        (3, [0.5, 0.5, 0.5, 0.5]),     # cos 0.5 to every ref → kept
-        (4, [0.0, 0.0, 0.0, 1.0]),     # orthogonal to all → kept
-    ]
-    d = str(tmp_path / "vecs_sem")
-    _write_batch(
-        d,
-        [{"vec_id": i, "embedding": v} for i, v in stream_rows],
-        "b0.json",
-    )
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("embedding", ArrayType(DoubleType())),
-        ]
-    )
-    stream = spark.readStream.schema(schema).json(d)
-    ref_table = semantic_reference_table(spark, idx)
-    out_rows = []
-    q = (
-        streaming_semantic_filter(
-            stream, idx, threshold=0.9, reference=ref_table
-        )
-        .writeStream.foreachBatch(
-            lambda df, _e: out_rows.extend(
-                r["vec_id"] for r in df.collect()
-            )
-        )
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert sorted(out_rows) == [3, 4]
-
-    # batch twin: IDENTICAL call on a batch DataFrame
-    batch = spark.createDataFrame(
-        stream_rows, "vec_id long, embedding array<double>"
-    )
-    kept = streaming_semantic_filter(batch, idx, threshold=0.9)
-    assert sorted(r["vec_id"] for r in kept.collect()) == sorted(out_rows)
-    # and the brute-force spec: drop iff an in-cluster ref neighbor >= tau
-    import numpy as np
-
-    refs = {i: np.array(v) / np.linalg.norm(v) for i, v in ref_rows}
-    expect_kept = []
-    for i, v in stream_rows:
-        u = np.array(v) / np.linalg.norm(v)
-        # nearest centroid = nearest ref (3 centroids = 3 singleton clusters)
-        nearest = max(refs, key=lambda r: (u @ refs[r], -r))
-        if u @ refs[nearest] < 0.9:
-            expect_kept.append(i)
-    assert sorted(out_rows) == sorted(expect_kept)
-
-
-def test_streaming_semantic_filter_empty_index(spark, tmp_path):
-    from wimbd_spark.operators.similarity import build_ivf_index
-    from wimbd_spark.streaming.dedup import streaming_semantic_filter
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "semempty")
-    build_ivf_index(empty, idx, n_centroids=2)
-    batch = spark.createDataFrame(
-        [(1, [1.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    kept = streaming_semantic_filter(batch, idx, threshold=0.5)
-    assert [r["vec_id"] for r in kept.collect()] == [1]
-
-
 def test_streaming_funnel_matches_batch(spark, tmp_path):
     from wimbd_spark.operators.funnel import quality_funnel
     from wimbd_spark.streaming import (
@@ -1478,6 +1379,81 @@ def test_streaming_contamination_hits_slop_hatch(spark, tmp_path, monkeypatch):
         (2, "alpha beta"),
         (3, "one two three four"),
     ]
+
+
+@pytest.mark.parametrize(
+    "method,slop,budget",
+    [("gram", 0, None), ("ac", 0, None), ("auto", 1, 3)],
+    ids=["gram", "ac", "slop1_scan_hatch"],
+)
+def test_contamination_hits_agree_with_batch_decontaminate(
+    spark, monkeypatch, method, slop, budget
+):
+    """The audit stream's hit docs and the batch operator's flagged
+    docs are one decision: both consumers of the shared eval-phrase
+    matcher agree on an adversarial batch frame (NULL / empty text, a
+    doc_id duplicated with different text, CJK tokens, an overlong
+    phrase, five phrase lengths) on every route, including slop=1 with
+    lengths 3, 5 and the overlong phrase forced through the scan
+    predicate (slop=1 costs L per length; budget 3 keeps 1 and 2)."""
+    import wimbd_spark.index as idx
+    from wimbd_spark.operators.dedup import decontaminate_by_ngrams
+    from wimbd_spark.streaming import (
+        eval_gram_table,
+        streaming_contamination_hits,
+    )
+
+    long_phrase = " ".join(
+        f"w{i}" for i in range(idx.GRAM_JOIN_MAX_PHRASE_TOKENS + 3)
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta"),
+            (2, None),
+            (3, ""),
+            (4, "夜 東京 タワー"),
+            (5, "the cat sat on the mat"),
+            (5, "nothing to see here"),
+            (6, f"pre {long_phrase} post"),
+            (7, "one two x three four five"),
+            (8, "beta alpha gamma"),
+        ],
+        "doc_id long, text string",
+    )
+    ev = spark.createDataFrame(
+        [
+            ("東京",),
+            ("alpha beta",),
+            ("cat sat on",),
+            ("gamma delta epsilon zeta",),
+            ("one two three four five",),
+            (long_phrase,),
+            (None,),
+            ("   ",),
+        ],
+        "phrase string",
+    )
+    if budget is not None:
+        monkeypatch.setattr(idx, "MAX_SLOP_COMBINATIONS", budget)
+
+    hit_ids = {
+        r["doc_id"]
+        for r in streaming_contamination_hits(
+            docs, eval_gram_table(ev), slop=slop, method=method
+        )
+        .select("doc_id")
+        .distinct()
+        .collect()
+    }
+    flagged = {
+        r["doc_id"]
+        for r in decontaminate_by_ngrams(
+            docs, ev, mode="flag", slop=slop, method=method
+        ).collect()
+        if r["contaminated"]
+    }
+    assert hit_ids == flagged
+    assert flagged == ({1, 4, 5, 6, 7} if slop else {1, 4, 5, 6})
 
 
 def test_streaming_ivf_ingest_reset_checkpoint_guard(spark, tmp_path):

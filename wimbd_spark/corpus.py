@@ -130,32 +130,6 @@ def to_parquet_corpus(
     w.parquet(path)
 
 
-def to_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_by: str,
-    n_buckets: int = 128,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Materialize as a BUCKETED catalog table: repeated joins /
-    aggregations keyed on ``bucket_by`` then run shuffle-free (both
-    sides pre-hashed into the same bucket layout). The scale play for
-    corpora that get joined on the same key over and over (doc hash,
-    user id): pay the shuffle once at write time.
-
-    ``path`` makes it an external table (bucketing requires the
-    catalog, so this is saveAsTable either way).
-    """
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_by)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
 def write_jsonl(df: DataFrame, path: str, force: bool = False) -> None:
     """JSONL result sink (S10). force ≙ --force overwrite
     (src/util.rs:6-25)."""

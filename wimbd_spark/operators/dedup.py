@@ -735,12 +735,6 @@ _AC_DECON_MIN_LENGTHS = 4
 _AC_DECON_MAX_OVERLONG = 32
 
 
-def _gram_cap() -> int:
-    from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS
-
-    return GRAM_JOIN_MAX_PHRASE_TOKENS
-
-
 #: Expression-tree budget for the scan-predicate slop fallback: each
 #: phrase becomes one windowed-subsequence predicate in a single
 #: projection, so the count bounds codegen size, not data volume.
@@ -820,6 +814,195 @@ def _scan_slop_matches(
     ).select(*keep, F.col("_hit")["phrase"].alias("phrase"))
 
 
+def eval_gram_table(
+    eval_df: DataFrame,
+    phrase_col: str = "phrase",
+    tokenizer=None,
+) -> DataFrame:
+    """Distinct (_L, _toks) token-grams of an eval-phrase set (NULL and
+    blank phrases dropped) — the phrase side of index-free n-gram
+    decontamination. decontaminate_by_ngrams builds it per call; the
+    streaming audit (streaming.streaming_contamination_hits) takes it
+    as a static table, materialized once per eval snapshot. Both feed
+    it to the same matcher (route_eval_phrases, eval_phrase_hits), so
+    batch and stream agree row-for-row."""
+    from wimbd_spark.functions.text import tokenize
+
+    tok = tokenizer if tokenizer is not None else tokenize
+    return (
+        eval_df.select(F.col(phrase_col).alias("_p"))
+        .filter(F.col("_p").isNotNull() & (F.trim(F.col("_p")) != ""))
+        .select(tok(F.col("_p")).alias("_toks"))
+        .filter(F.size("_toks") >= 1)
+        .withColumn("_L", F.size("_toks"))
+        .select("_L", "_toks")
+        .distinct()
+    )
+
+
+def route_eval_phrases(
+    evg: DataFrame, method: str, slop: int, tokenizer
+) -> tuple[list[str] | None, list[int]]:
+    """The index-free matching decision for an eval_gram_table:
+    ``(patterns, [])`` routes to one Aho-Corasick pass over
+    ``patterns``; ``(None, lengths)`` routes to eval_phrase_hits over
+    the sorted distinct phrase lengths, which are empty exactly when
+    the eval set is.
+
+    ``method="ac"`` pins the automaton (slop=0 and the default
+    tokenizer only) with ONE bounded collect that yields both the
+    budget check and the pattern list; ``"gram"`` pins the gram plan;
+    ``"auto"`` reads one per-length aggregate (never collecting the
+    phrases, which may be gram-route huge) and takes the automaton
+    only inside [_AC_DECON_MIN_PHRASES, _AC_DECON_MAX_PHRASES] phrases
+    with ≥ _AC_DECON_MIN_LENGTHS distinct short lengths or
+    > _AC_DECON_MAX_OVERLONG overlong phrases."""
+    from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS
+
+    if method not in ("auto", "ac", "gram"):
+        raise ValueError(
+            f"unknown method {method!r}: expected 'auto', 'ac' or "
+            "'gram'"
+        )
+    ac_eligible = slop == 0 and tokenizer is None
+    if method == "ac" and not ac_eligible:
+        raise ValueError(
+            "method='ac' needs slop=0 and the default tokenizer "
+            "(the automaton matches on canonical whitespace "
+            "tokenization)"
+        )
+    if method == "ac":
+        rows = (
+            evg.select("_toks").limit(_AC_DECON_MAX_PHRASES + 1).collect()
+        )
+        if len(rows) > _AC_DECON_MAX_PHRASES:
+            raise ValueError(
+                f"method='ac' got more than {_AC_DECON_MAX_PHRASES} "
+                f"distinct phrases; the automaton budget is "
+                f"[1, {_AC_DECON_MAX_PHRASES}] — use method='gram' "
+                "beyond it (the gram join never materializes the "
+                "phrase set in one process)"
+            )
+        if not rows:
+            return None, []
+        return [" ".join(r["_toks"]) for r in rows], []
+    if method == "gram" or not ac_eligible:
+        return None, sorted(
+            r["_L"] for r in evg.select("_L").distinct().collect()
+        )
+    per_len = {
+        r["_L"]: r["_n"]
+        for r in evg.groupBy("_L").agg(F.count(F.lit(1)).alias("_n")).collect()
+    }
+    n = sum(per_len.values())
+    cap = GRAM_JOIN_MAX_PHRASE_TOKENS
+    n_short_lengths = sum(1 for L in per_len if L <= cap)
+    n_over = sum(c for L, c in per_len.items() if L > cap)
+    if _AC_DECON_MIN_PHRASES <= n <= _AC_DECON_MAX_PHRASES and (
+        n_short_lengths >= _AC_DECON_MIN_LENGTHS
+        or n_over > _AC_DECON_MAX_OVERLONG
+    ):
+        return [
+            " ".join(r["_toks"]) for r in evg.select("_toks").collect()
+        ], []
+    return None, sorted(per_len)
+
+
+def eval_phrase_hits(
+    docs: DataFrame,
+    evg: DataFrame,
+    lengths: list[int],
+    keep_cols: list[str],
+    text_col: str,
+    tokenizer,
+    slop: int,
+    broadcast_eval: bool,
+) -> DataFrame:
+    """(keep_cols..., phrase) hit rows of the gram plan for the
+    non-empty sorted phrase ``lengths`` of an eval_gram_table, as the
+    union of up to three parts:
+
+    - lengths ≤ GRAM_JOIN_MAX_PHRASE_TOKENS: the map-side gram explode
+      (_text_grams; ``slop>0`` uses the anchored-subsequence keys)
+      joined to the eval grams — one row per gram occurrence, the eval
+      side broadcast when ``broadcast_eval``;
+    - longer phrases at slop=0: normalized-text `contains`
+      (_normalized_tokens_text) in a broadcast nested loop — one row
+      per (doc, phrase), since the explode's output scales with max L;
+    - at slop>0, the lengths that break index.MAX_SLOP_COMBINATIONS
+      under the cheapest-first split (_slop_budget_split), plus any
+      overlong phrase (contains is contiguous-only): the windowed scan
+      predicate (_scan_slop_matches) — one row per (doc, phrase).
+      More than SCAN_SLOP_MAX_PHRASES such phrases raise.
+
+    Both budgets are read at call time."""
+    from functools import reduce
+
+    from wimbd_spark.index import (
+        GRAM_JOIN_MAX_PHRASE_TOKENS,
+        MAX_SLOP_COMBINATIONS,
+    )
+
+    cap = GRAM_JOIN_MAX_PHRASE_TOKENS
+    src = docs.select(*keep_cols, text_col)
+    short_lengths = [L for L in lengths if L <= cap]
+    scan_lengths: list[int] = []
+    if slop:
+        short_lengths, scan_lengths = _slop_budget_split(
+            short_lengths, slop, MAX_SLOP_COMBINATIONS
+        )
+        scan_lengths += [L for L in lengths if L > cap]
+    parts = []
+    if scan_lengths:
+        sphr = [
+            " ".join(r["_toks"])
+            for r in evg.filter(F.col("_L").isin(scan_lengths))
+            .select("_toks")
+            .collect()
+        ]
+        if len(sphr) > SCAN_SLOP_MAX_PHRASES:
+            raise ValueError(
+                f"slop={slop} routes {len(sphr)} phrases (lengths "
+                f"{scan_lengths}) to the scan predicate — over the "
+                f"{SCAN_SLOP_MAX_PHRASES}-phrase expression budget; "
+                "match via the indexed matcher "
+                "(index.phrase_matches_batch) instead"
+            )
+        parts.append(
+            _scan_slop_matches(src, sphr, text_col, tokenizer, slop)
+        )
+    if short_lengths:
+        evs = evg.filter(F.col("_L") <= cap)
+        if broadcast_eval:
+            evs = F.broadcast(evs)
+        parts.append(
+            _text_grams(src, short_lengths, text_col, tokenizer, slop=slop)
+            .join(evs, ["_L", "_toks"])
+            .select(
+                *keep_cols, F.array_join("_toks", " ").alias("phrase")
+            )
+        )
+    if lengths[-1] > cap and not slop:
+        evl = evg.filter(F.col("_L") > cap).select(
+            F.array_join("_toks", " ").alias("phrase")
+        )
+        norm = src.select(
+            *keep_cols,
+            _normalized_tokens_text(F.col(text_col), tokenizer).alias(
+                "_nt"
+            ),
+        )
+        parts.append(
+            norm.join(
+                F.broadcast(evl),
+                on=F.col("_nt").contains(
+                    F.concat(F.lit(" "), F.col("phrase"), F.lit(" "))
+                ),
+            ).select(*keep_cols, "phrase")
+        )
+    return reduce(DataFrame.unionByName, parts)
+
+
 def decontaminate_by_ngrams(
     train: DataFrame,
     eval_df: DataFrame,
@@ -844,255 +1027,73 @@ def decontaminate_by_ngrams(
     this operator closes the loop: the docs the sweep would count are
     the docs this removes.
 
-    ``method``: ``"gram"`` = the gram-explode semi-join below;
-    ``"ac"`` = one Aho-Corasick pass
-    (operators.multipattern.matching_doc_ids_ac — per-doc cost
-    independent of the phrase count AND the length mix, phrases
-    collected to the driver and compiled into a per-task automaton;
-    slop=0 and the default tokenizer only, raises otherwise);
-    ``"auto"`` (default) routes to the automaton exactly where the
-    gram path's cost multipliers bite — the map-side explode emits one
-    gram per (token, DISTINCT PHRASE LENGTH) and each overlong phrase
-    (> GRAM_JOIN_MAX_PHRASE_TOKENS) adds a per-doc `contains` to a
-    broadcast nested loop, so a single-length set is flat in the
-    phrase count and stays on grams (measured sf0.1, P=12.5k single
-    length: gram 1.35 s ≈ AC 1.2 s), while ≥ _AC_DECON_MIN_LENGTHS
-    distinct short lengths or > _AC_DECON_MAX_OVERLONG overlong
-    phrases route to AC (measured sf0.1, P=10k over 8 lengths: gram
-    3.1–3.7 s vs AC 1.0–2.4 s). Both paths are row-identical
-    (parity-pinned); auto additionally requires
-    [_AC_DECON_MIN_PHRASES, _AC_DECON_MAX_PHRASES] distinct phrases
-    (below, automaton build cost isn't worth it; above, the per-task
-    trie memory is).
+    The eval phrases become an eval_gram_table, and the shared
+    index-free matcher decides and plans the match: route_eval_phrases
+    picks the route from ``method``, and eval_phrase_hits plans the
+    gram route (streaming.streaming_contamination_hits uses the same
+    two). ``method``: ``"gram"`` = the gram plan; ``"ac"`` = one
+    Aho-Corasick pass (operators.multipattern.matching_doc_ids_ac —
+    per-doc cost independent of the phrase count AND the length mix,
+    phrases collected to the driver and compiled into a per-task
+    automaton; slop=0 and the default tokenizer only, raises
+    otherwise); ``"auto"`` (default) routes to the automaton exactly
+    where the gram path's cost multipliers bite — the map-side explode
+    emits one gram per (token, DISTINCT PHRASE LENGTH) and each
+    overlong phrase (> GRAM_JOIN_MAX_PHRASE_TOKENS) adds a per-doc
+    `contains` to a broadcast nested loop, so a single-length set is
+    flat in the phrase count and stays on grams (measured sf0.1,
+    P=12.5k single length: gram 1.35 s ≈ AC 1.2 s), while many
+    distinct short lengths or many overlong phrases route to AC
+    (measured sf0.1, P=10k over 8 lengths: gram 3.1–3.7 s vs AC
+    1.0–2.4 s). Both routes are row-identical (parity-pinned).
 
     100 TB plan shape: eval phrases → distinct (L, token-array) grams
     (broadcast by default — eval sets are small; pass
     ``broadcast_eval=False`` for corpus-scale phrase sets and AQE
     sizes the join); train docs → map-side gram explode carrying ONLY
-    ``id_col`` (one pass, no shuffle of full rows); semi-join + distinct
+    ``id_col`` (one pass, no shuffle of full rows); join + distinct
     gives contaminated ids; one id-probe anti/left join restores full
     rows. The train side is scanned twice but never shuffled at full
     width; the gram explode is the same cost class as an n-gram count.
-
-    Phrases longer than GRAM_JOIN_MAX_PHRASE_TOKENS skip the gram
-    explode (whose map-side output scales with max L × corpus tokens)
-    and match via normalized-text `contains` instead — token-aligned
-    containment IS substring containment on space-normalized text
-    (_normalized_tokens_text), one broadcast nested-loop predicate per
-    (doc, overlong phrase), fully distributed at any phrase length.
-
-    ``slop>0`` with a length mix whose windowed-subsequence
-    enumeration breaks index.MAX_SLOP_COMBINATIONS no longer raises:
-    the cheapest lengths keep the gram plan within the budget and the
-    rest (plus any overlong phrase, whose contains match is
-    contiguous-only) route through the search tier's windowed scan
-    predicate (_scan_slop_matches) — scan cost instead of explode
-    cost, same hit set. Only a routed-phrase COUNT above
-    SCAN_SLOP_MAX_PHRASES (an expression-tree bound) still raises,
-    pointing at the indexed matcher.
+    Phrases longer than GRAM_JOIN_MAX_PHRASE_TOKENS match via
+    normalized-text `contains` instead of the explode, and at
+    ``slop>0`` the lengths past index.MAX_SLOP_COMBINATIONS route to
+    the windowed scan predicate (same hit set, scan cost instead of
+    explode cost); only a scan-routed phrase COUNT above
+    SCAN_SLOP_MAX_PHRASES (an expression-tree bound) raises, pointing
+    at the indexed matcher.
     """
-    from wimbd_spark.functions.text import tokenize
-    from wimbd_spark.index import (
-        GRAM_JOIN_MAX_PHRASE_TOKENS,
-        MAX_SLOP_COMBINATIONS,
-        slop_combination_count,
-    )
+    from wimbd_spark.operators.multipattern import matching_doc_ids_ac
 
     if mode not in ("drop", "flag"):
         raise ValueError(f"mode must be 'drop' or 'flag', got {mode!r}")
-    if method not in ("auto", "ac", "gram"):
-        raise ValueError(
-            f"unknown method {method!r}: expected 'auto', 'ac' or "
-            "'gram'"
+    evg = eval_gram_table(eval_df, phrase_col, tokenizer)
+    ac_phrases, lengths = route_eval_phrases(evg, method, slop, tokenizer)
+    if ac_phrases is not None:
+        hits = matching_doc_ids_ac(
+            train.select(id_col, text_col),
+            ac_phrases,
+            id_col=id_col,
+            text_col=text_col,
         )
-    ac_eligible = slop == 0 and tokenizer is None
-    if method == "ac" and not ac_eligible:
-        raise ValueError(
-            "method='ac' needs slop=0 and the default tokenizer "
-            "(the automaton matches on canonical whitespace "
-            "tokenization)"
-        )
-    tok = tokenizer if tokenizer is not None else tokenize
-    evg = (
-        eval_df.select(F.col(phrase_col).alias("_p"))
-        .filter(F.col("_p").isNotNull() & (F.trim(F.col("_p")) != ""))
-        .select(tok(F.col("_p")).alias("_toks"))
-        .filter(F.size("_toks") >= 1)
-        .withColumn("_L", F.size("_toks"))
-        .select("_L", "_toks")
-        .distinct()
-    )
-    if method == "ac" or (method == "auto" and ac_eligible):
-        ac_phrases: list[str] | None = None
-        if method == "ac":
-            # the automaton is pinned: ONE bounded collect yields both
-            # the routing count and the pattern list (the previous
-            # per-length probe + pattern collect ran the whole eval
-            # distinct pipeline TWICE — measured ~2.4 s per call, r15)
-            rows = (
-                evg.select("_toks")
-                .limit(_AC_DECON_MAX_PHRASES + 1)
-                .collect()
-            )
-            n = len(rows)
-            if n > _AC_DECON_MAX_PHRASES:
-                raise ValueError(
-                    f"method='ac' got more than "
-                    f"{_AC_DECON_MAX_PHRASES} distinct phrases; the "
-                    f"automaton budget is [1, {_AC_DECON_MAX_PHRASES}]"
-                    " — use method='gram' beyond it (the gram join "
-                    "never materializes the phrase set in one process)"
-                )
-            ac_phrases = [" ".join(r["_toks"]) for r in rows]
-        else:
-            # auto: one small aggregate decides the route WITHOUT
-            # collecting phrases (the set may be gram-route huge)
-            per_len = {
-                r["_L"]: r["_n"]
-                for r in evg.groupBy("_L")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            }
-            n = sum(per_len.values())
-            cap_probe = _gram_cap()
-            n_short_lengths = sum(1 for L in per_len if L <= cap_probe)
-            n_over = sum(
-                c for L, c in per_len.items() if L > cap_probe
-            )
-            gram_multiplier_bites = (
-                n_short_lengths >= _AC_DECON_MIN_LENGTHS
-                or n_over > _AC_DECON_MAX_OVERLONG
-            )
-        if n == 0:
-            # nothing to match (empty/blank eval set) — same contract
-            # as the gram path's empty-lengths return below
-            if mode == "drop":
-                return train
-            return train.withColumn(flag_col, F.lit(False))
-        if method == "ac" or (
-            n <= _AC_DECON_MAX_PHRASES
-            and n >= _AC_DECON_MIN_PHRASES
-            and gram_multiplier_bites
-        ):
-            from wimbd_spark.operators.multipattern import (
-                matching_doc_ids_ac,
-            )
-
-            hits = matching_doc_ids_ac(
-                train.select(id_col, text_col),
-                ac_phrases
-                if ac_phrases is not None
-                else [
-                    " ".join(r["_toks"])
-                    for r in evg.select("_toks").collect()
-                ],
-                id_col=id_col,
-                text_col=text_col,
-            ).distinct()
-            # distinct matches the gram path's hits.distinct(): with
-            # duplicate ids in train, a bare left join in flag mode
-            # would fan out rows and break the documented row-identical
-            # parity between method='ac' and method='gram' (r11 ADVICE)
-            if mode == "drop":
-                return train.join(hits, id_col, "left_anti")
-            return (
-                train.join(
-                    hits.withColumn("_hit", F.lit(True)),
-                    id_col,
-                    "left",
-                )
-                .withColumn(
-                    flag_col, F.coalesce(F.col("_hit"), F.lit(False))
-                )
-                .drop("_hit")
-            )
-        lengths = sorted(per_len)
+    elif lengths:
+        hits = eval_phrase_hits(
+            train,
+            evg,
+            lengths,
+            [id_col],
+            text_col,
+            tokenizer,
+            slop,
+            broadcast_eval,
+        ).select(id_col)
+    elif mode == "drop":
+        # nothing to match (empty/blank eval set)
+        return train
     else:
-        lengths = sorted(
-            r["_L"] for r in evg.select("_L").distinct().collect()
-        )
-    if not lengths:
-        if mode == "drop":
-            return train
         return train.withColumn(flag_col, F.lit(False))
-    cap = GRAM_JOIN_MAX_PHRASE_TOKENS
-    short_lengths = [L for L in lengths if L <= cap]
-    scan_lengths: list[int] = []
-    if slop:
-        # the slop escape hatch (r12 VERDICT #5): lengths whose
-        # windowed-subsequence enumeration breaks the map-side budget
-        # route to the scan predicate instead of raising wholesale;
-        # budgeted lengths keep the explode plan unchanged. Overlong
-        # phrases (contains is contiguous-only, incompatible with
-        # slop) take the same scan route — the predicate works at any
-        # length.
-        short_lengths, scan_lengths = _slop_budget_split(
-            short_lengths, slop, MAX_SLOP_COMBINATIONS
-        )
-        scan_lengths = scan_lengths + [L for L in lengths if L > cap]
-    hit_parts = []
-    if scan_lengths:
-        sphr = [
-            " ".join(r["_toks"])
-            for r in evg.filter(F.col("_L").isin(scan_lengths))
-            .select("_toks")
-            .collect()
-        ]
-        if len(sphr) > SCAN_SLOP_MAX_PHRASES:
-            raise ValueError(
-                f"slop={slop} routes {len(sphr)} phrases (lengths "
-                f"{scan_lengths}) to the scan predicate — over the "
-                f"{SCAN_SLOP_MAX_PHRASES}-phrase expression budget; "
-                "decontaminate via the indexed matcher "
-                "(index.phrase_matches_batch) and anti-join the hit "
-                "ids"
-            )
-        hit_parts.append(
-            _scan_slop_matches(
-                train.select(id_col, text_col),
-                sphr,
-                text_col,
-                tokenizer,
-                slop,
-            ).select(id_col)
-        )
-    if short_lengths:
-        evs = evg.filter(F.col("_L") <= cap)
-        if broadcast_eval:
-            evs = F.broadcast(evs)
-        hit_parts.append(
-            _text_grams(
-                train.select(id_col, text_col),
-                short_lengths,
-                text_col,
-                tokenizer,
-                slop=slop,
-            )
-            .join(evs, ["_L", "_toks"], "left_semi")
-            .select(id_col)
-        )
-    if lengths[-1] > cap and not slop:
-        evl = evg.filter(F.col("_L") > cap).select(
-            F.concat(
-                F.lit(" "), F.array_join(F.col("_toks"), " "), F.lit(" ")
-            ).alias("_np")
-        )
-        norm = train.select(
-            F.col(id_col),
-            _normalized_tokens_text(F.col(text_col), tokenizer).alias(
-                "_nt"
-            ),
-        )
-        hit_parts.append(
-            norm.join(
-                F.broadcast(evl),
-                on=F.col("_nt").contains(F.col("_np")),
-                how="inner",
-            ).select(id_col)
-        )
-    hits = hit_parts[0]
-    for part in hit_parts[1:]:
-        hits = hits.unionByName(part)
+    # distinct: with duplicate ids in train, a bare left join in flag
+    # mode would fan out rows (and break ac/gram row parity)
     hits = hits.distinct()
     if mode == "drop":
         return train.join(hits, id_col, "left_anti")

@@ -1134,43 +1134,6 @@ def resize_image(
     )
 
 
-def frame_sample(
-    media: DataFrame,
-    every_ms: int = 1000,
-    deterministic_fake: bool = True,
-) -> DataFrame:
-    """Video → sampled frames (doc_id, frame_idx, frame binary).
-
-    Stub: fake frames are byte slices; a real impl swaps the slicer
-    for an ffmpeg seek+decode while keeping the identical dataflow.
-    """
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("frame_idx", LongType(), False),
-            StructField("frame", BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not deterministic_fake:
-            raise NotImplementedError("real frame sampling requires ffmpeg")
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = payload or b""
-                step = max(every_ms, 1)
-                for i, off in enumerate(range(0, max(len(payload), 1), step)):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(bytes(payload[off : off + step]))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(run, out_schema)
-
-
 def bytes_meta(media: DataFrame) -> DataFrame:
     """Cheap JVM-side metadata over payloads (no Python): size + first
     byte (hex) — the 'magic sniff' step before any decode fan-out."""

@@ -173,6 +173,18 @@ def _matched_ids(text: str, goto, fail, out) -> set:
     return hits
 
 
+def _padded_patterns(phrases: list[str]) -> list[str]:
+    """Each phrase analyzed with the engine's query convention
+    (whitespace split, drop empties) and space-padded for token
+    alignment; empty lists and token-less phrases raise."""
+    if not phrases:
+        raise ValueError("phrases must be non-empty")
+    analyzed = [" ".join(p.split()) for p in phrases]
+    if any(not a for a in analyzed):
+        raise ValueError("every phrase must contain >= 1 token")
+    return [f" {a} " for a in analyzed]
+
+
 def count_documents_for_each_phrase_ac(
     df: DataFrame,
     phrases: list[str],
@@ -182,14 +194,7 @@ def count_documents_for_each_phrase_ac(
     ``search.count_documents_for_each_phrase(phrases)`` (token-aligned,
     slop=0) — one automaton pass per document instead of one predicate
     per phrase."""
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    # analyze each phrase with the engine's query convention
-    # (whitespace split, drop empties), space-pad for token alignment
-    analyzed = [" ".join(p.split()) for p in phrases]
-    if any(not a for a in analyzed):
-        raise ValueError("every phrase must contain >= 1 token")
-    pats = [f" {a} " for a in analyzed]
+    pats = _padded_patterns(phrases)
 
     toks = df.filter(F.col(text_col).isNotNull()).select(
         tokenize(F.col(text_col)).alias("toks")
@@ -246,12 +251,7 @@ def matching_doc_ids_ac(
     Returns a (id_col) DataFrame to LEFT SEMI join against the corpus
     (`search.get_documents_containing_phrases(method="ac")` does
     exactly that); per-doc cost independent of the phrase count."""
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    analyzed = [" ".join(p.split()) for p in phrases]
-    if any(not a for a in analyzed):
-        raise ValueError("every phrase must contain >= 1 token")
-    pats = [f" {a} " for a in analyzed]
+    pats = _padded_patterns(phrases)
     need = len(set(pats)) if all_phrases else 1
 
     toks = df.filter(F.col(text_col).isNotNull()).select(
@@ -312,17 +312,12 @@ def phrase_hits_ac(
     flips routes on phrase-set shape, so the audit row multiset must
     not depend on the route). Works on batch AND streaming DataFrames
     (stateless mapInPandas)."""
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    analyzed = [" ".join(p.split()) for p in phrases]
-    if any(not a for a in analyzed):
-        raise ValueError("every phrase must contain >= 1 token")
-    pats = [f" {a} " for a in analyzed]
+    pats = _padded_patterns(phrases)
     names = [p.strip() for p in pats]
     from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS
 
     overlong = [
-        len(a.split()) > GRAM_JOIN_MAX_PHRASE_TOKENS for a in analyzed
+        len(a.split()) > GRAM_JOIN_MAX_PHRASE_TOKENS for a in names
     ]
 
     keep = [c for c in df.columns if c != text_col]

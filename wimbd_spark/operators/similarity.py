@@ -347,6 +347,22 @@ def sign_sketch(vec_name: str, planes: list[list[float]]) -> Column:
     return F.expr(f"CAST({' + '.join(bits)} AS BIGINT)")
 
 
+def _probe_buckets(nbits: int, multiprobe: bool) -> Column:
+    """The buckets a row with home bucket ``_b0`` probes: the home
+    bucket alone, or with ``multiprobe`` also every bucket one bit
+    flip away (pairwise distinct values, so a pair meets at most once
+    when the other side keeps only its home bucket)."""
+    if not multiprobe:
+        return F.array(F.col("_b0"))
+    return F.array(
+        F.col("_b0"),
+        *[
+            F.col("_b0").bitwiseXOR(F.lit(2**p)).cast("long")
+            for p in range(nbits)
+        ],
+    )
+
+
 def _centroid_rows(
     corpus: DataFrame, id_col: str, vec_col: str, n_centroids: int
 ) -> list:
@@ -837,16 +853,6 @@ def _lsh_block_pairs(
     ).withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("_b0"),
-            *[
-                F.col("_b0").bitwiseXOR(F.lit(2**p)).cast("long")
-                for p in range(nbits)
-            ],
-        )
-    else:
-        probes = F.array(F.col("_b0"))
     # fresh aliases (_idb/_vb): both cogroup sides derive from the
     # same `live` plan, and attributes sharing the left side's exprIds
     # are deduplicated out of the right side's schema — the Python
@@ -854,7 +860,7 @@ def _lsh_block_pairs(
     probe = live.select(
         F.col("_id").alias("_idb"),
         F.col("_v").alias("_vb"),
-        F.explode(probes).alias("bucket"),
+        F.explode(_probe_buckets(nbits, multiprobe)).alias("bucket"),
     ).withColumn(
         "_salt", F.pmod(F.xxhash64("_idb"), F.lit(n_salt)).cast("int")
     )
@@ -990,16 +996,7 @@ def cosine_pairs_lsh(
                 "block_gemm='auto' (or False) to route dirty "
                 "collections down the classic join"
             )
-    if multiprobe:
-        probes = F.array(
-            F.col("_b0"),
-            *[
-                F.col("_b0").bitwiseXOR(F.lit(2**p)).cast("long")
-                for p in range(nbits)
-            ],
-        )
-    else:
-        probes = F.array(F.col("_b0"))
+    probes = _probe_buckets(nbits, multiprobe)
     exp = base.select(
         "_id", "_v", F.col("_b0"), F.explode(probes).alias("bucket")
     )
@@ -1054,16 +1051,7 @@ def cosine_topk_lsh(
         F.col(id_col).alias("query_id"),
         _unit(_to_double(F.col(vec_col))).alias("_qv"),
     ).withColumn("_b0", sign_sketch("_qv", planes))
-    if multiprobe:
-        probes = F.array(
-            F.col("_b0"),
-            *[
-                F.col("_b0").bitwiseXOR(F.lit(2**p)).cast("long")
-                for p in range(nbits)
-            ],
-        )
-    else:
-        probes = F.array(F.col("_b0"))
+    probes = _probe_buckets(nbits, multiprobe)
     q = q.select(
         "query_id", "_qv", F.explode(probes).alias("bucket")
     )
@@ -2723,53 +2711,6 @@ def needs_recluster(
         return False  # short-circuit before the centroids read
     n_cent = spark.read.parquet(f"{path}/centroids").count()
     return skew_triggered(sizes, n_cent, skew_factor, min_rows)
-
-
-def maintain_ivf_index(
-    spark,
-    path: str,
-    fresh_path: str,
-    skew_factor: float = DEFAULT_RECLUSTER_SKEW,
-    absorb_fraction: float = DEFAULT_ABSORB_FRACTION,
-    n_centroids: int | None = None,
-) -> str:
-    """The maintenance-cron body: check both triggers and perform the
-    strongest indicated action, writing any new generation at
-    ``fresh_path``. Returns what happened:
-
-    - ``"reclustered"`` — skew tripped needs_recluster: k-means re-fit
-      rewrite (consumes any delta as a side effect);
-    - ``"absorbed"`` — delta share tripped needs_absorb only:
-      fold the delta into a fresh single-tier generation;
-    - ``"ok"`` — neither trigger fired; NOTHING was written and the
-      caller must NOT repoint readers to ``fresh_path``.
-
-    Recluster wins when both fire — it is the superset action. One
-    decision pass: one lists scan (delta included via _read_lists),
-    one delta-only count, one centroids count — both verdicts derive
-    from those three numbers, nothing is re-scanned. (The ivf-maintain
-    CLI verb reports the same trigger verdicts but only acts under
-    explicit --absorb-to / --recluster-to — operators choose when
-    generations swap.)"""
-    from pyspark.errors import AnalysisException
-
-    sizes = [r["size"] for r in ivf_list_sizes(spark, path).collect()]
-    n_cent = spark.read.parquet(f"{path}/centroids").count()
-    if skew_triggered(sizes, n_cent, skew_factor=skew_factor):
-        recluster_ivf_index(
-            spark, path, fresh_path, n_centroids=n_centroids
-        )
-        return "reclustered"
-    n_delta = 0
-    if _hadoop_exists(spark, f"{path}/delta"):
-        try:
-            n_delta = spark.read.parquet(f"{path}/delta").count()
-        except AnalysisException:
-            n_delta = 0
-    if n_delta > absorb_fraction * sum(sizes):
-        absorb_ivf_delta(spark, path, fresh_path)
-        return "absorbed"
-    return "ok"
 
 
 def recluster_ivf_index(

@@ -740,23 +740,6 @@ def compression_ratio(text: Column | str, level: int = 6) -> Column:
     return _ratio(c)
 
 
-def compression_filter(
-    df: DataFrame,
-    min_ratio: float = 0.25,
-    max_ratio: float = 1.05,
-    text_col: str = "text",
-) -> DataFrame:
-    """Keep documents whose compression ratio lies inside
-    [min_ratio, max_ratio] — drops heavy-repetition boilerplate (low)
-    and incompressible noise (high). NULL/empty text is dropped (no
-    signal). Composable with the other gates (gopher_quality_filter,
-    perplexity filter) as one more map-side predicate."""
-    r = compression_ratio(F.col(text_col))
-    return df.filter(
-        r.isNotNull() & (r >= min_ratio) & (r <= max_ratio)
-    )
-
-
 # ------------------------------------------------------- C4 heuristics
 
 #: Small public-blocklist subset (the full pipeline uses the LDNOOBW

@@ -31,6 +31,12 @@ from pyspark.sql.types import (
 )
 
 from wimbd_spark.functions.text import doc_hash
+from wimbd_spark.operators.dedup import (
+    decontaminate_by_ngrams,
+    eval_gram_table,
+    eval_phrase_hits,
+    route_eval_phrases,
+)
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -223,29 +229,6 @@ def streaming_neardup_filter(
     return cur.filter(no_hit).select(*docs.columns)
 
 
-def eval_gram_table(
-    eval_df: DataFrame,
-    phrase_col: str = "phrase",
-    tokenizer=None,
-) -> DataFrame:
-    """Distinct (_L, _toks) token-grams of a STATIC eval-phrase set —
-    the blocklist side of the streaming contamination gate (same
-    construction as the batch decontaminate_by_ngrams, so batch and
-    stream agree row-for-row). Materialize once per eval snapshot."""
-    from wimbd_spark.functions.text import tokenize
-
-    tok = tokenizer if tokenizer is not None else tokenize
-    return (
-        eval_df.select(F.col(phrase_col).alias("_p"))
-        .filter(F.col("_p").isNotNull() & (F.trim(F.col("_p")) != ""))
-        .select(tok(F.col("_p")).alias("_toks"))
-        .filter(F.size("_toks") >= 1)
-        .withColumn("_L", F.size("_toks"))
-        .select("_L", "_toks")
-        .distinct()
-    )
-
-
 def streaming_contamination_hits(
     docs: DataFrame,
     eval_grams: DataFrame,
@@ -262,179 +245,42 @@ def streaming_contamination_hits(
     a state store — use streaming_decontaminate_by_ngrams for exact
     enforcement via foreachBatch).
 
-    Plan: the eval set's distinct phrase LENGTHS are read once at
-    STREAM SETUP (a handful of ints — the static side's only
-    driver-visible state); each micro-batch then gram-explodes its
-    docs map-side (_text_grams — no shuffle, no UDF; ``slop>0`` uses
-    the anchored-subsequence keys, r8, multiplying the explode by the
-    combo count and possibly emitting several rows per (doc, phrase)
-    window hit, like multiple contiguous occurrences already do) and
-    inner-joins the broadcast static gram table. No watermark, no
-    state store: composes anywhere in a stateless gate chain.
-
-    ``method`` mirrors dedup.decontaminate_by_ngrams: ``"ac"`` = one
-    Aho-Corasick occurrence-counting pass per micro-batch
-    (multipattern.phrase_hits_ac — stateless mapInPandas, per-doc cost
-    flat in the phrase count AND the length mix; slop=0 and the
-    default tokenizer only), row-MULTISET-identical to the gram join
-    (one row per occurrence for phrases within
-    GRAM_JOIN_MAX_PHRASE_TOKENS, overlaps included; ONE row per doc
-    for overlong phrases — matching the gram path's contains
-    existence join, so the audit multiset is route-independent, r11
-    ADVICE); ``"auto"`` routes by
-    the same measured multipliers (≥ distinct-length / overlong
-    thresholds, phrase-count budget); ``"gram"`` pins the explode
-    join.
+    ``eval_grams`` is an eval_gram_table. The route is decided ONCE at
+    STREAM SETUP by the index-free matcher that
+    dedup.decontaminate_by_ngrams shares (dedup.route_eval_phrases: the
+    static side's lengths or patterns are its only driver-visible
+    state; ``method`` is "auto", "ac" or "gram"). The gram route is
+    dedup.eval_phrase_hits: each micro-batch gram-explodes its docs
+    map-side (no shuffle, no UDF; ``slop>0`` uses the
+    anchored-subsequence keys, r8, possibly emitting several rows per
+    (doc, phrase) window hit, like multiple contiguous occurrences
+    already do) and inner-joins the broadcast static gram table;
+    overlong and scan-routed phrases emit ONE row per (doc, phrase).
+    The "ac" route is multipattern.phrase_hits_ac, one stateless
+    occurrence-counting pass per micro-batch, row-MULTISET-identical
+    to the gram route (r11 ADVICE). No watermark, no state store:
+    composes anywhere in a stateless gate chain. An empty eval set
+    raises.
     """
-    from wimbd_spark.index import (
-        GRAM_JOIN_MAX_PHRASE_TOKENS,
-        MAX_SLOP_COMBINATIONS,
-        slop_combination_count,
-    )
-    from wimbd_spark.operators.dedup import (
-        _AC_DECON_MAX_OVERLONG,
-        _AC_DECON_MAX_PHRASES,
-        _AC_DECON_MIN_LENGTHS,
-        _AC_DECON_MIN_PHRASES,
-        _normalized_tokens_text,
-        _text_grams,
-    )
+    from wimbd_spark.operators.multipattern import phrase_hits_ac
 
-    if method not in ("auto", "ac", "gram"):
-        raise ValueError(
-            f"unknown method {method!r}: expected 'auto', 'ac' or "
-            "'gram'"
-        )
-    ac_eligible = slop == 0 and tokenizer is None
-    if method == "ac" and not ac_eligible:
-        raise ValueError(
-            "method='ac' needs slop=0 and the default tokenizer"
-        )
-    if method in ("ac", "auto") and ac_eligible:
-        per_len = {
-            r["_L"]: r["_n"]
-            for r in eval_grams.groupBy("_L")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        }
-        n = sum(per_len.values())
-        cap_probe = GRAM_JOIN_MAX_PHRASE_TOKENS
-        n_short_lengths = sum(1 for L in per_len if L <= cap_probe)
-        n_over = sum(c for L, c in per_len.items() if L > cap_probe)
-        bites = (
-            n_short_lengths >= _AC_DECON_MIN_LENGTHS
-            or n_over > _AC_DECON_MAX_OVERLONG
-        )
-        if n == 0:
-            raise ValueError("eval_grams is empty — nothing to match")
-        if method == "ac" or (
-            _AC_DECON_MIN_PHRASES <= n <= _AC_DECON_MAX_PHRASES
-            and bites
-        ):
-            if n > _AC_DECON_MAX_PHRASES:
-                raise ValueError(
-                    f"method='ac' got {n} distinct phrases; the "
-                    f"automaton budget is [1, {_AC_DECON_MAX_PHRASES}]"
-                    " — use method='gram' beyond it"
-                )
-            from wimbd_spark.operators.multipattern import (
-                phrase_hits_ac,
-            )
-
-            return phrase_hits_ac(
-                docs,
-                [
-                    " ".join(r["_toks"])
-                    for r in eval_grams.select("_toks").collect()
-                ],
-                text_col=text_col,
-            )
-
-    lengths = sorted(
-        r["_L"] for r in eval_grams.select("_L").distinct().collect()
+    ac_phrases, lengths = route_eval_phrases(
+        eval_grams, method, slop, tokenizer
     )
+    if ac_phrases is not None:
+        return phrase_hits_ac(docs, ac_phrases, text_col=text_col)
     if not lengths:
         raise ValueError("eval_grams is empty — nothing to match")
-    cap = GRAM_JOIN_MAX_PHRASE_TOKENS
-    short_lengths = [L for L in lengths if L <= cap]
-    scan_lengths: list[int] = []
-    if slop:
-        # the slop escape hatch (r12 VERDICT #5), mirroring the batch
-        # operator: lengths past the map-side combination budget (and
-        # overlong phrases, whose contains match is contiguous-only)
-        # route through the scan predicate instead of raising; the
-        # routed phrases are collected ONCE at stream setup like the
-        # lengths themselves (static side). Scan-routed phrases emit
-        # ONE audit row per (doc, phrase) — the same existence
-        # convention the overlong-contains path below already uses.
-        from wimbd_spark.operators.dedup import (
-            SCAN_SLOP_MAX_PHRASES,
-            _scan_slop_matches,
-            _slop_budget_split,
-        )
-
-        short_lengths, scan_lengths = _slop_budget_split(
-            short_lengths, slop, MAX_SLOP_COMBINATIONS
-        )
-        scan_lengths = scan_lengths + [L for L in lengths if L > cap]
-    parts = []
-    if scan_lengths:
-        sphr = [
-            " ".join(r["_toks"])
-            for r in eval_grams.filter(F.col("_L").isin(scan_lengths))
-            .select("_toks")
-            .collect()
-        ]
-        if len(sphr) > SCAN_SLOP_MAX_PHRASES:
-            raise ValueError(
-                f"slop={slop} routes {len(sphr)} phrases (lengths "
-                f"{scan_lengths}) to the scan predicate — over the "
-                f"{SCAN_SLOP_MAX_PHRASES}-phrase expression budget"
-            )
-        parts.append(
-            _scan_slop_matches(docs, sphr, text_col, tokenizer, slop)
-        )
-    if short_lengths:
-        grams = _text_grams(
-            docs, short_lengths, text_col, tokenizer, slop=slop
-        )
-        parts.append(
-            grams.join(
-                F.broadcast(eval_grams.filter(F.col("_L") <= cap)),
-                ["_L", "_toks"],
-                "inner",
-            )
-            .withColumn("phrase", F.array_join(F.col("_toks"), " "))
-            .drop("_L", "_toks")
-        )
-    if lengths[-1] > cap and not slop:
-        # overlong phrases skip the gram explode (map-side output
-        # scales with max L): token-aligned containment == substring
-        # containment on space-normalized text, one broadcast
-        # nested-loop predicate per (doc, overlong phrase)
-        evl = eval_grams.filter(F.col("_L") > cap).select(
-            F.array_join(F.col("_toks"), " ").alias("phrase")
-        )
-        keep = [c for c in docs.columns if c != text_col]
-        norm = docs.select(
-            *keep,
-            _normalized_tokens_text(F.col(text_col), tokenizer).alias(
-                "_nt"
-            ),
-        )
-        parts.append(
-            norm.join(
-                F.broadcast(evl),
-                on=F.col("_nt").contains(
-                    F.concat(F.lit(" "), F.col("phrase"), F.lit(" "))
-                ),
-                how="inner",
-            ).drop("_nt")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return eval_phrase_hits(
+        docs,
+        eval_grams,
+        lengths,
+        [c for c in docs.columns if c != text_col],
+        text_col,
+        tokenizer,
+        slop,
+        broadcast_eval=True,
+    )
 
 
 def streaming_decontaminate_by_ngrams(
@@ -463,7 +309,6 @@ def streaming_decontaminate_by_ngrams(
     ``batch=<epoch>`` subdirectory, so at-least-once redelivery never
     duplicates survivors). Returns the StreamingQuery.
     """
-    from wimbd_spark.operators.dedup import decontaminate_by_ngrams
 
     def _gate(batch_df: DataFrame, epoch: int) -> None:
         out = decontaminate_by_ngrams(
@@ -743,86 +588,6 @@ def streaming_url_filter(
         .filter(~F.coalesce(hit, F.lit(False)))
         .drop("blocked")
     )
-
-
-def semantic_reference_table(spark: SparkSession, index_path: str) -> DataFrame:
-    """Static side of the streaming semantic gate: the persisted IVF
-    index's lists (similarity.build_ivf_index) folded to ONE row per
-    centroid — (centroid, uvecs: array of unit vectors). Materialize
-    once per index snapshot; at most n_centroids rows, so the
-    stream-static join below broadcasts under any sane threshold.
-    Per-row width is the whole cluster's vectors (~target_cluster ×
-    dim doubles) — size n_centroids so clusters stay broadcast-able,
-    exactly the auto_ncentroids rule."""
-    return (
-        spark.read.parquet(f"{index_path}/lists")
-        .groupBy("centroid")
-        .agg(F.collect_list("uvec").alias("uvecs"))
-    )
-
-
-def streaming_semantic_filter(
-    vecs: DataFrame,
-    index_path: str,
-    threshold: float = 0.7,
-    vec_col: str = "embedding",
-    reference: DataFrame | None = None,
-) -> DataFrame:
-    """SemDeDup-on-ingest: drop stream rows whose embedding has cosine
-    ≥ ``threshold`` with ANY vector of the persisted IVF index
-    (similarity.build_ivf_index) in the row's nearest-centroid cluster
-    — the streaming twin of semantic_duplicates against a static
-    reference corpus. Probabilistic exactly like the batch operator: a
-    near-dup split across a cluster boundary is missed by design (that
-    locality is what makes this a single stateless pass).
-
-    Plan shape: unit-normalize + nearest-centroid assignment are pure
-    per-row expressions against the literal centroid array (from the
-    index's tiny centroids table — stateless, stream-safe); the gate
-    is ONE stream-static LEFT equi-join on the centroid id. The static
-    side (``reference``, default ``semantic_reference_table`` over the
-    same index) carries one row per centroid, so the join NEVER
-    duplicates stream rows, and the ≥τ test is a collection `exists`
-    over the cluster's vectors in the same stage. No state store, no
-    watermark; composes before the stateful exact-dedup stage.
-    """
-    from wimbd_spark.operators.similarity import (
-        _centroid_literal,
-        _nearest_centroids,
-        _to_double,
-        _unit,
-        dot,
-    )
-
-    spark = vecs.sparkSession
-    cents = spark.read.parquet(f"{index_path}/centroids").collect()
-    if not cents:
-        return vecs  # empty index: nothing to collide with
-    cent_arr = _centroid_literal(
-        [{"centroid_id": r["centroid_id"], "_cent": r["v"]} for r in cents]
-    )
-    if reference is None:
-        reference = semantic_reference_table(spark, index_path)
-    ref = reference.select(
-        F.col("centroid").alias("_ref_cent"), F.col("uvecs").alias("_uvecs")
-    )
-    cur = vecs.withColumn(
-        "_uv", _unit(_to_double(F.col(vec_col)))
-    ).withColumn(
-        "_cent", _nearest_centroids(F.col("_uv"), cent_arr, 1)[0]["cid"]
-    )
-    joined = cur.join(
-        ref, cur["_cent"] == ref["_ref_cent"], "left"
-    )
-    uv = joined["_uv"]
-    hit = F.exists(
-        F.coalesce(
-            joined["_uvecs"],
-            F.array().cast("array<array<double>>"),
-        ),
-        lambda rv: dot(uv, rv) >= F.lit(float(threshold)),
-    )
-    return joined.filter(~hit).select(*vecs.columns)
 
 
 def streaming_funnel_gate(
